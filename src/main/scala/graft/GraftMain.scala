@@ -29,6 +29,19 @@ import graft.streaming.{DailyRollover, JdbcUpsertSink, ParquetTableSink, Streami
   *     sink, so a mid-day refresh is picked up automatically), and merges
   *     into the JDBC fact table under `withRetries`.
   *
+  * A poll tick over a fresh drop is ONE micro-batch. The drain runs without
+  * the watermark-only "no-data" batch Spark would otherwise add after it
+  * (`StreamingOps.startWithoutNoDataBatches`, scoped to this query): the
+  * dedup emits nothing on eviction, and the watermark the batch advances is
+  * already in the checkpoint's commit log (`commits/<n>` →
+  * `nextBatchWatermarkMs`), which the next tick's restart restores before
+  * its batch. Spark's late-row filter would still lag one tick (it reads the
+  * previous batch's offset entry), so the poll filters at that committed
+  * watermark itself (`StreamingOps.dropBehindCommittedWatermark`): late
+  * rows drop exactly as before. Expired dedup state is evicted one tick
+  * later; its keys carry `ts` at or behind the watermark, so it can never
+  * match a row that passed the late filter.
+  *
   * Exactly-once across a mid-day kill follows from the composition already
   * proven piecewise: checkpointed offsets (re-entry skips committed
   * batches), the JDBC sink's transactional merge + batch-id guard, and the
@@ -90,30 +103,35 @@ final class GraftApp(spark: SparkSession, sfDir: String, incomingDir: String,
     StructField("user_id", LongType),
     StructField("value", DoubleType)))
 
+  private val checkpoint = s"$workDir/ckpt"
+
   /** One poll pass: drain whatever landed in the incoming directory through
     * dedup → per-batch dim enrich → transactional JDBC merge, restarting
     * from the checkpoint on transient failure (bounded). */
   private def poll(): Unit = {
     StreamingOps.withRetries(maxAttempts) { () =>
-      val stream = spark.readStream.schema(eventSchema).parquet(s"$incomingDir/*")
-      StreamingOps.dedupByKey(stream, "ts", "10 minutes", Seq("event_id"))
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], id: Long) =>
-          // ST6: the dim is re-resolved HERE, per micro-batch — a refresh
-          // committed since the last batch is visible to this one.
-          val cust = customerSink.current
-            .select(col("c_custkey"), col("c_mktsegment"))
-          val enriched = batch
-            .join(broadcast(cust), batch("user_id") === cust("c_custkey"), "left")
-            .select(col("event_id"), col("ts"), col("user_id"), col("value"),
-              col("c_mktsegment"))
-          preMergeHook(id)
-          factSink.merge(enriched, id)
-        }
-        .start()
+      val stream = StreamingOps.dropBehindCommittedWatermark(
+        spark.readStream.schema(eventSchema).parquet(s"$incomingDir/*"), "ts", checkpoint)
+      StreamingOps.startWithoutNoDataBatches(spark) {
+        StreamingOps.dedupByKey(stream, "ts", "10 minutes", Seq("event_id"))
+          .writeStream
+          .outputMode("update")
+          .option("checkpointLocation", checkpoint)
+          .trigger(Trigger.AvailableNow())
+          .foreachBatch { (batch: Dataset[Row], id: Long) =>
+            // ST6: the dim is re-resolved HERE, per micro-batch — a refresh
+            // committed since the last batch is visible to this one.
+            val cust = customerSink.current
+              .select(col("c_custkey"), col("c_mktsegment"))
+            val enriched = batch
+              .join(broadcast(cust), batch("user_id") === cust("c_custkey"), "left")
+              .select(col("event_id"), col("ts"), col("user_id"), col("value"),
+                col("c_mktsegment"))
+            preMergeHook(id)
+            factSink.merge(enriched, id)
+          }
+          .start()
+      }
     }
     ()
   }

@@ -124,7 +124,9 @@ final class JdbcUpsertSink(url: String, table: String, keys: Seq[String],
 
   /** Create target/staging/commit-log tables (and the retry-dedup table) if
     * absent. */
-  def ensureTables(): Unit = withConn { c =>
+  def ensureTables(): Unit = withConn(createTables)
+
+  private def createTables(c: Connection): Unit = {
     val colDefs = schema.fields.map(f => s"${f.name} ${sqlType(f.dataType)}").mkString(", ")
     val stageDefs = stagingSchema.fields.map(f => s"${f.name} ${sqlType(f.dataType)}").mkString(", ")
     ensure(c, s"CREATE TABLE $table ($colDefs, PRIMARY KEY (${keys.mkString(", ")}))")
@@ -146,7 +148,12 @@ final class JdbcUpsertSink(url: String, table: String, keys: Seq[String],
   }
 
   def lastCommittedBatchId: Long = withConn { c =>
-    ensureTables()
+    createTables(c)
+    committedBatchId(c)
+  }
+
+  /** The recorded batch id on an open connection; the tables must exist. */
+  private def committedBatchId(c: Connection): Long = {
     val ps = c.prepareStatement("SELECT batch_id FROM graft_commits WHERE sink_name = ?")
     ps.setString(1, table)
     val rs = ps.executeQuery()
@@ -456,14 +463,15 @@ final class JdbcUpsertSink(url: String, table: String, keys: Seq[String],
 
   /** Micro-batch upsert with the exactly-once batchId guard. */
   def merge(batch: DataFrame, batchId: Long): Unit = {
-    ensureTables()
+    // the DDL runs once per merge; the guard re-check below reads on the
+    // lock connection, where the tables already exist
     if (batchId <= lastCommittedBatchId) return // replay of a committed batch
     val lock = timed("acquire-lock")(acquireWriterLock())
     try {
       onLockAcquired()
       // re-check under the lock: the writer we waited behind may have
       // committed this very batch (replayed work splitting across writers)
-      if (batchId <= lastCommittedBatchId) return
+      if (batchId <= committedBatchId(lock)) return
       timed("clear-staging")(clearStaging()) // repeatable: a replayed batch re-stages from scratch
       timed("load-staging")(loadStaging(batch))
       timed("merge-commit")(mergeCommit(batchId))

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.checkpointing.CommitLog
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import graft.{Q, Tables}
 import graft.operators.MergeOps
@@ -173,6 +174,61 @@ object StreamingOps {
     }
     attempt
   }
+
+  /** Start a query that runs no watermark-only ("no-data") micro-batches,
+    * leaving the session's own setting as it was.
+    *
+    * By default, after a batch that moves the watermark Spark runs one more
+    * batch with no input, only to evict state and emit what the new
+    * watermark closes. A dedup-only drain emits nothing on eviction, and
+    * the advanced watermark is already in the commit log
+    * (`commits/<n>` → `nextBatchWatermarkMs`), which a restarted query
+    * restores before its next batch. So for an `AvailableNow` poll that
+    * extra batch is pure cost: a full empty pass through the sink.
+    *
+    * `start()` clones the session's conf into the query, so setting the
+    * flag around `start` scopes it to this one query. Do NOT use this for
+    * stream-stream outer joins or append-mode aggregations: they need the
+    * no-data batch to emit.
+    *
+    * One thing the skipped batch did carry: Spark drops late rows in batch
+    * n against the watermark of batch n-1's offset entry, and without the
+    * no-data batch that entry holds the watermark from one drain earlier.
+    * A deduplicating query therefore pairs this with
+    * [[dropBehindCommittedWatermark]], which restores the late filter.
+    */
+  def startWithoutNoDataBatches(spark: SparkSession)(start: => StreamingQuery): StreamingQuery = {
+    val prev = spark.conf.getAll.get(NoDataBatchesConf) // explicitly set only, not the default
+    spark.conf.set(NoDataBatchesConf, "false")
+    try start
+    finally prev match {
+      case Some(v) => spark.conf.set(NoDataBatchesConf, v)
+      case None => spark.conf.unset(NoDataBatchesConf)
+    }
+  }
+
+  val NoDataBatchesConf = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** Drop the rows of `events` at or behind the watermark the query
+    * checkpointed at `checkpointDir` last committed (`nextBatchWatermarkMs`
+    * of the latest `commits/` entry) — the late-row filter a query run by
+    * [[startWithoutNoDataBatches]] would otherwise apply one drain late.
+    * With no commit yet there is nothing to filter. The test is Spark's own
+    * (`eventTime <= watermark` is late; a NULL event time is not), so the
+    * rows that pass are exactly those a query with no-data batches admits.
+    */
+  def dropBehindCommittedWatermark(events: DataFrame, eventTimeCol: String,
+                                   checkpointDir: String): DataFrame =
+    new CommitLog(events.sparkSession, s"$checkpointDir/commits").getLatest() match {
+      case Some((_, commit)) =>
+        val watermark = java.time.Instant.ofEpochMilli(commit.nextBatchWatermarkMs)
+        // a UDF, not a literal: the watermark rides into the generated code
+        // as a reference object, so the code is the same every drain and the
+        // compiled class is reused instead of recompiled per poll
+        val onTime = udf((t: java.time.Instant) => t == null || t.isAfter(watermark))
+        events.filter(onTime(col(eventTimeCol)))
+      case None => events
+    }
 
   /** The JDBC-table stand-in for tests: a named in-memory target maintained
     * through MergeOps.upsert, exactly what a `foreachBatch` JDBC MERGE would
